@@ -13,7 +13,13 @@ See SURVEY.md for the capability mapping and file:line citations into the
 reference.
 """
 
+from dedup_gpu_stream_parallelism_spark import zipimport_guard
 from dedup_gpu_stream_parallelism_spark.config import DEFAULT_CONFIG, DedupConfig
+
+# A worker unpickling any engine UDF imports this package; from its next
+# task on, the per-task import-cache reset stops re-parsing unchanged zips.
+if zipimport_guard.in_pyspark_worker():
+    zipimport_guard.install()
 
 
 def run_pipeline(*args, **kwargs):

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dedup_gpu_stream_parallelism_spark.session import local_frame
+
 
 def connected_components(
     vertices: DataFrame,
@@ -130,10 +132,7 @@ def clusters_from_pairs(
         labels = _driver_union_find(
             [(r[0], r[1]) for r in edges.collect()]
         )
-        if labels:
-            cc = spark.createDataFrame(labels, f"{id_col} long, cluster_id long")
-        else:
-            cc = spark.createDataFrame([], f"{id_col} long, cluster_id long")
+        cc = local_frame(spark, labels, f"{id_col} long, cluster_id long")
     else:
         touched = (
             edges.select(F.col("a_id").alias(id_col))

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dedup_gpu_stream_parallelism_spark.session import local_frame
+
 MEDIA_SCHEMA = (
     "media_id bigint, media_type string, payload binary, width int, height int, "
     "sample_rate int, n_frames int"
@@ -57,7 +59,7 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                 int(rs.randint(1, 300)) if mtype == "video" else 1,
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_decode(payload: bytes, media_type: str) -> np.ndarray:

@@ -22,11 +22,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dedup_gpu_stream_parallelism_spark.session import local_frame
+
 TOPK_SCHEMA = "vec_id bigint, neighbor_id bigint, rank int, cosine double"
 
 
 def _empty_topk(spark) -> DataFrame:
-    return spark.createDataFrame([], TOPK_SCHEMA)
+    return local_frame(spark, [], TOPK_SCHEMA)
 
 
 def _normalized_matrix(pdf: pd.DataFrame, id_col: str, vec_col: str):
@@ -52,11 +54,11 @@ def _blocked_topk(src: DataFrame, k: int, n_blocks: int) -> DataFrame:
     )
     pairs_list = [(i, j) for i in range(n_blocks) for j in range(n_blocks)]
     left = blocked.join(
-        spark.createDataFrame(pairs_list, "l_bi int, l_bj int"),
+        local_frame(spark, pairs_list, "l_bi int, l_bj int"),
         blocked["blk"] == F.col("l_bi"),
     ).select(F.col("l_bi").alias("bi"), F.col("l_bj").alias("bj"), "vec_id", "vec")
     right = blocked.join(
-        spark.createDataFrame(pairs_list, "r_bi int, r_bj int"),
+        local_frame(spark, pairs_list, "r_bi int, r_bj int"),
         blocked["blk"] == F.col("r_bj"),
     ).select(
         F.col("r_bi").alias("bi"),
@@ -341,7 +343,7 @@ def _blocked_threshold_pairs(
     pairs_list = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
     left = (
         blocked.join(
-            spark.createDataFrame(pairs_list, "l_bi int, l_bj int"),
+            local_frame(spark, pairs_list, "l_bi int, l_bj int"),
             blocked["blk"] == F.col("l_bi"),
         )
         .select(
@@ -350,7 +352,7 @@ def _blocked_threshold_pairs(
     )
     right = (
         blocked.join(
-            spark.createDataFrame(pairs_list, "r_bi int, r_bj int"),
+            local_frame(spark, pairs_list, "r_bi int, r_bj int"),
             blocked["blk"] == F.col("r_bj"),
         )
         .select(
@@ -583,7 +585,7 @@ def cosine_near_dup_pairs(
     spark = emb.sparkSession
     index_pdf = src.toPandas().sort_values("vec_id").reset_index(drop=True)
     if len(index_pdf) == 0:
-        return spark.createDataFrame([], PAIRS_SCHEMA)
+        return local_frame(spark, [], PAIRS_SCHEMA)
     if len(index_pdf) > BROADCAST_MAX_ROWS:
         raise ValueError(
             f"broadcast strategy refused: {len(index_pdf)} rows > "

@@ -10,8 +10,12 @@ AQE skew-join plus our explicit band-key salting (operators/lsh.py).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def build_session(
@@ -58,3 +62,24 @@ def build_session(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: str | StructType
+) -> DataFrame:
+    """The one way the engine turns driver-side rows into a DataFrame.
+
+    The rows travel as one Arrow table and plan as a ``LocalTableScan``:
+    no Python task runs when the frame is consumed.  ``createDataFrame`` on
+    a Python list instead plans a ``Scan ExistingRDD`` over a PythonRDD that
+    costs one Python task per default-parallelism slot even for zero rows.
+    The frame's schema is ``schema`` itself, as with a list.
+    """
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

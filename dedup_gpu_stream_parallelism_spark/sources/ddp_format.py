@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from dedup_gpu_stream_parallelism_spark.config import DedupConfig
 from dedup_gpu_stream_parallelism_spark.operators.chunk import chunk_documents
+from dedup_gpu_stream_parallelism_spark.session import local_frame
 
 CHECKBIT = 123456
 TYPE_FINGERPRINT = 0
@@ -332,7 +333,7 @@ def import_ddp(spark: SparkSession, out_dir: str, sink=None) -> DataFrame:
     ):
         # empty corpus exported zero shards (every partition empty before
         # the UDF ran) — nothing to decode
-        return spark.createDataFrame([], "doc_id bigint, data binary")
+        return local_frame(spark, [], "doc_id bigint, data binary")
     shards = (
         spark.read.format("binaryFile")
         .load(os.path.join(out_dir, "shard-*.ddp"))

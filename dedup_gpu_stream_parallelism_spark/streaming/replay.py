@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dedup_gpu_stream_parallelism_spark.config import DedupConfig
+from dedup_gpu_stream_parallelism_spark.session import local_frame
 from dedup_gpu_stream_parallelism_spark.streaming.dedup_stream import (
     NearDupStream,
     exact_dedup_stream,
@@ -36,6 +37,10 @@ from dedup_gpu_stream_parallelism_spark.streaming.dedup_stream import (
 #: batch count used by the driver replay queries AND their oracle SQL —
 #: the SQL recomputes the same ranges with (COUNT(*) + N - 1) // N.
 REPLAY_BATCHES = 4
+
+
+class SliceStagingError(RuntimeError):
+    """A replay slice did not stage as exactly one parquet file."""
 
 
 def _mtime_at(slot: int) -> float:
@@ -71,7 +76,9 @@ def stage_range_batches(
     Returns ``per`` — the range width; slice *i* holds ids in
     ``[i*per, (i+1)*per)``.  Ids are assumed 0..n-1 (the testdata contract,
     shared with the incremental queries).  Pass ``n`` when the caller
-    already knows the row count to skip the count job.
+    already knows the row count to skip the count job.  Raises
+    ``SliceStagingError`` if the write split a slice over several files
+    (e.g. under ``spark.sql.files.maxRecordsPerFile``).
     """
     if n is None:
         n = docs.count()
@@ -101,6 +108,12 @@ def stage_range_batches(
             if os.path.isdir(sdir)
             else []
         )
+        if len(files) > 1:
+            raise SliceStagingError(
+                f"slice {i} of {srcdir!r} staged as {len(files)} parquet "
+                f"files ({sorted(files)}); the replay needs exactly one file "
+                "per slice (one trigger each)"
+            )
         if files:
             os.replace(os.path.join(sdir, files[0]), dst)
             os.utime(dst, (_mtime_at(i), _mtime_at(i)))
@@ -373,7 +386,8 @@ def stream_window_stats_replay(
     parts.unpersist()
     if not n:
         # no events → no windows; nothing for a sentinel to flush
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "window_start_epoch bigint, event_type string, "
             "n_events bigint, sum_value_micro bigint",

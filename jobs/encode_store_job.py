@@ -91,6 +91,7 @@ def main() -> None:
     from dedup_gpu_stream_parallelism_spark.config import DedupConfig
     from dedup_gpu_stream_parallelism_spark.operators import exact as exact_op
     from dedup_gpu_stream_parallelism_spark.operators import store as store_op
+    from dedup_gpu_stream_parallelism_spark.session import local_frame
 
     cfg = DedupConfig()
     docs = spark.read.parquet(args.input)
@@ -131,8 +132,8 @@ def main() -> None:
         os.path.join(args.output, "doc_manifest")
     )
     # record ancestry so the NEXT append can resolve the full chain
-    spark.createDataFrame(
-        [(args.append_to or "",)], "append_to string"
+    local_frame(
+        spark, [(args.append_to or "",)], "append_to string"
     ).coalesce(1).write.mode("overwrite").json(os.path.join(args.output, "_lineage"))
 
     # stats describe the CUMULATIVE archive: in append mode the manifest

@@ -111,3 +111,48 @@ def test_signature_fanout_queries_evaluate_the_udf_once(spark):
     for name in ("minhash_jaccard_estimate", "simhash_near_dup"):
         plan = _plan(e.queries()[name](spark, SF))
         assert "MapInPandas" not in plan, name
+
+
+def test_driver_built_frames_plan_as_local_table_scans(spark):
+    """The union-find label frame and the block-pair frames are built on the
+    driver; they must reach Spark as Arrow ``LocalTableScan`` nodes, not as
+    a ``Scan ExistingRDD`` over a PythonRDD (one Python task per slot even
+    for a handful of rows)."""
+    from dedup_gpu_stream_parallelism_spark.operators.cluster import clusters_from_pairs
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    docs = spark.range(6).withColumnRenamed("id", "doc_id")
+    pairs = spark.range(2).select(
+        (F.col("id") * 2).alias("a_id"), (F.col("id") * 2 + 1).alias("b_id")
+    )
+    for name, df in {
+        "blocked_topk": sim.cosine_topk(emb, k=3, strategy="blocked"),
+        "blocked_pairs": sim.cosine_near_dup_pairs(emb, 0.4, strategy="blocked"),
+        "cluster_labels": clusters_from_pairs(docs, pairs),
+    }.items():
+        plan = _plan(df)
+        assert "LocalTableScan" in plan, name
+        assert "Scan ExistingRDD" not in plan, name
+
+
+@pytest.mark.parametrize(
+    "schema, rows",
+    [
+        ("doc_id long, cluster_id long", [(1, 1), (2, 1)]),
+        ("doc_id long, cluster_id long", []),
+        ("doc_id bigint, data binary", [(3, bytearray(b"\x00\xff"))]),
+        ("a string, b int, c double", [("x", None, 0.5), (None, 7, None)]),
+    ],
+)
+def test_local_frame_matches_the_list_frame(spark, schema, rows):
+    """Same schema and rows as ``createDataFrame(<list>, schema)``, empty
+    frames included, but planned as a ``LocalTableScan``."""
+    from dedup_gpu_stream_parallelism_spark.session import local_frame
+
+    want = spark.createDataFrame(rows, schema)
+    got = local_frame(spark, rows, schema)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+    assert "LocalTableScan" in _plan(got)

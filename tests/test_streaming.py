@@ -500,6 +500,28 @@ def test_shared_staged_docs_stages_once(spark, tmp_path):
     assert "_staged" in stamps1
 
 
+def test_stage_range_batches_rejects_multi_file_slice(spark, tmp_path):
+    """A slice the write split over two files must fail loudly: the replay
+    used to stage ``files[0]`` and silently drop the rest of the slice."""
+    from dedup_gpu_stream_parallelism_spark.streaming import replay
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(8)], "doc_id bigint, text string"
+    )
+    ok = str(tmp_path / "ok")
+    assert replay.stage_range_batches(docs, ok, n_batches=2) == 4
+    assert sorted(os.listdir(ok)) == ["0000.parquet", "0001.parquet"]
+    assert spark.read.parquet(ok).count() == 8
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "2")  # each 4-row slice now writes two files
+    try:
+        with pytest.raises(replay.SliceStagingError, match="slice 0 .* 2 parquet"):
+            replay.stage_range_batches(docs, str(tmp_path / "split"), n_batches=2)
+    finally:
+        spark.conf.unset(key)
+
+
 def test_text_history_read_is_bucket_pruned(spark, tmp_path):
     """confirm=True: the per-trigger history read must partition-prune to
     the matched ids' tbucket partitions, so text I/O per trigger tracks
