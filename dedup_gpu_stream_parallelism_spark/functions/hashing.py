@@ -95,214 +95,6 @@ def batch_shingle_hashes_from_codes(
     return flat, starts
 
 
-def _fold_mersenne_inplace(x: np.ndarray) -> None:
-    """In-place exact ``x mod MERSENNE`` for ``0 <= x < 2**62``.
-
-    ``2**31 ≡ 1 (mod 2**31-1)`` so folding the high bits onto the low bits
-    preserves the residue: two shift-add folds bring the value to
-    ``<= MERSENNE + 1``, one conditional subtract finishes.  ~6 cheap vector
-    ops instead of an int64 division per element (the division dominated the
-    MinHash inner loop).  Bit-identical to ``%`` by construction — fuzzed in
-    tests/test_fused_hashing.py."""
-    t = np.right_shift(x, 31)
-    x &= MERSENNE
-    x += t
-    np.right_shift(x, 31, out=t)
-    x &= MERSENNE
-    x += t
-    np.subtract(x, MERSENNE, out=x, where=x >= MERSENNE)
-
-
-def _pow2_ladder(codes: np.ndarray, base: int, kmax: int) -> dict[int, np.ndarray]:
-    """Rolling-hash doubling ladder over a code block.
-
-    ``ladder[w][i]`` = the w-char shingle hash starting at ``i`` (valid for
-    ``i <= n-w``; tail entries are bounded garbage ``< MERSENNE`` so later
-    combines never overflow).  Each level is one vectorized
-    multiply+add+fold pass — no window materialization, no matmul:
-    ``H_{2w}[i] = H_w[i] + base^w * H_w[i+w]  (mod P)``."""
-    n = codes.shape[0]
-    ladder = {1: codes}
-    w = 1
-    while 2 * w <= kmax:
-        h = ladder[w]
-        bw = pow(base, w, MERSENNE)
-        nh = np.empty(n, dtype=np.int64)
-        m = n - w
-        if m > 0:
-            # h < P and bw < P ⇒ product < 2**62: in-range for the fold
-            np.multiply(h[w:], bw, out=nh[:m])
-            nh[:m] += h[:m]
-            _fold_mersenne_inplace(nh[:m])
-        nh[max(m, 0):] = h[max(m, 0):]
-        ladder[2 * w] = nh
-        w *= 2
-    return ladder
-
-
-def _compose_k(ladder: dict[int, np.ndarray], base: int, k: int) -> np.ndarray:
-    """k-char hashes from the pow2 ladder via binary decomposition:
-    ``H_{L+w}[i] = H_L[i] + base^L * H_w[i+L]`` over the set bits of k."""
-    n = ladder[1].shape[0]
-    acc = None
-    length = 0
-    e = 0
-    rem = k
-    while rem:
-        w = 1 << e
-        if rem & w:
-            piece = ladder[w]
-            if acc is None:
-                acc = piece
-            else:
-                bl = pow(base, length, MERSENNE)
-                nh = np.empty(n, dtype=np.int64)
-                m = n - length
-                if m > 0:
-                    np.multiply(piece[length:], bl, out=nh[:m])
-                    nh[:m] += acc[:m]
-                    _fold_mersenne_inplace(nh[:m])
-                nh[max(m, 0):] = acc[max(m, 0):]
-                acc = nh
-            length += w
-            rem -= w
-        e += 1
-    return acc if acc is not None else np.zeros(n, dtype=np.int64)
-
-
-# Process the concatenated batch in blocks so the ladder temporaries stay
-# cache/memory-bounded (a block plus its wmax-1 halo; ~8 MB of int64 per
-# ladder level at the default) while outputs fill full-length arrays.
-STREAM_BLOCK = 1 << 20
-
-
-def batch_hash_streams(
-    parts: list[np.ndarray],
-    k: int,
-    cdc_window: int | None = None,
-    base1: int = BASE1,
-    base2: int | None = BASE2,
-    block: int = STREAM_BLOCK,
-) -> tuple[np.ndarray, np.ndarray | None, np.ndarray, np.ndarray | None, np.ndarray | None]:
-    """All three signature hash streams in ONE fused pass over the batch.
-
-    ``parts`` is one int64 code array per doc (``text_codes``).  Returns
-    ``(flat1, flat2, starts, cdc_flat, cdc_starts)`` where ``flat1``/``flat2``
-    are the k-shingle hashes under ``base1``/``base2`` (identical to
-    ``batch_shingle_hashes``) and ``cdc_flat`` the ``cdc_window``-shingle
-    hashes under ``base1`` (identical to per-doc ``shingle_hashes(t,
-    cdc_window)``).  ``cdc_flat``/``cdc_starts`` are None when
-    ``cdc_window`` is None; ``flat2`` is None when ``base2`` is None
-    (callers that only need the BASE1 set, e.g. pair verification).
-
-    This replaces three independent per-doc passes (two k-window matmuls +
-    one cdc-window matmul, each re-building windows) with one doubling
-    ladder per base over one concatenated buffer — the BASE1 ladder is
-    shared between the k-shingle and the CDC stream, and the slow ``%`` is
-    the shift-add Mersenne fold.  Valid windows are gathered per doc with a
-    grouped-arange (no per-doc python in the hash math)."""
-    n_docs = len(parts)
-    lens = np.array([p.shape[0] for p in parts], dtype=np.int64)
-    offs = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    n = int(offs[-1])
-    codes = (
-        np.concatenate(parts) if n else np.empty(0, dtype=np.int64)
-    )
-    targets = [(base1, k)]
-    if base2 is not None:
-        targets.append((base2, k))
-    if cdc_window is not None and (base1, cdc_window) not in targets:
-        targets.append((base1, cdc_window))
-    wmax = max(t[1] for t in targets)
-    outs = {t: np.empty(n, dtype=np.int64) for t in targets}
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        sl = codes[b0 : min(n, b1 + wmax - 1)]
-        bases = {b for b, _ in targets}
-        ladders = {
-            b: _pow2_ladder(sl, b, max(kk for bb, kk in targets if bb == b))
-            for b in bases
-        }
-        m = b1 - b0
-        for b, kk in targets:
-            outs[(b, kk)][b0:b1] = _compose_k(ladders[b], b, kk)[:m]
-    flat1, starts = _gather_valid(outs[(base1, k)], offs, lens, k)
-    flat2 = (
-        _gather_valid(outs[(base2, k)], offs, lens, k)[0]
-        if base2 is not None
-        else None
-    )
-    if cdc_window is None:
-        return flat1, flat2, starts, None, None
-    cdc_flat, cdc_starts = _gather_valid(
-        outs[(base1, cdc_window)], offs, lens, cdc_window
-    )
-    return flat1, flat2, starts, cdc_flat, cdc_starts
-
-
-def _gather_valid(
-    h: np.ndarray, offs: np.ndarray, lens: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc valid window hashes from a concatenated stream: doc d's
-    windows start at ``offs[d] .. offs[d] + len_d - k`` (empty if
-    ``len_d < k``).  Grouped-arange gather — no python loop."""
-    vl = np.maximum(lens - (k - 1), 0)
-    starts = np.zeros(lens.shape[0] + 1, dtype=np.int64)
-    np.cumsum(vl, out=starts[1:])
-    total = int(starts[-1])
-    if total == 0:
-        return np.empty(0, dtype=np.int64), starts
-    idx = (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(starts[:-1], vl)
-        + np.repeat(offs[:-1], vl)
-    )
-    return h[idx], starts
-
-
-def shingle_hashes_ladder(
-    codes: np.ndarray, k: int, base: int = BASE1
-) -> np.ndarray:
-    """Same output as ``shingle_hashes_from_codes`` via the doubling ladder:
-    O(log k) vectorized passes instead of a k-wide int64 matmul — the win
-    grows with k (the verify stage's exact-gram test uses k=256, where the
-    matmul does 256 multiply-adds per position).  Exact for any k (every
-    intermediate stays below 2**62 before its fold)."""
-    n = codes.shape[0]
-    if n < k:
-        return np.empty(0, dtype=np.int64)
-    ladder = _pow2_ladder(codes, base, k)
-    h = _compose_k(ladder, base, k)
-    if h is codes:  # k == 1: h_i = code_i (< MERSENNE already)
-        h = codes.copy()
-    return h[: n - k + 1]
-
-
-def batch_distinct_per_doc(
-    flat: np.ndarray, starts: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-doc sorted-distinct values of a segmented hash stream in one
-    global keyed sort (values are 31-bit, so ``seg_id << 31 | value`` is an
-    exact composite key): returns ``(uniq_flat, uniq_starts, n_distinct)``.
-    Replaces a per-doc ``np.unique`` python loop; identical output order
-    (ascending within each doc)."""
-    n_docs = starts.shape[0] - 1
-    if flat.shape[0] == 0:
-        z = np.zeros(n_docs + 1, dtype=np.int64)
-        return np.empty(0, dtype=np.int64), z, np.zeros(n_docs, dtype=np.int64)
-    seg_ids = np.repeat(np.arange(n_docs, dtype=np.int64), np.diff(starts))
-    key = np.sort((seg_ids << 31) | flat)
-    keep = np.empty(key.shape[0], dtype=bool)
-    keep[0] = True
-    np.not_equal(key[1:], key[:-1], out=keep[1:])
-    uq = key[keep]
-    n_distinct = np.bincount(uq >> 31, minlength=n_docs).astype(np.int64)
-    uniq_starts = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(n_distinct, out=uniq_starts[1:])
-    return uq & MERSENNE, uniq_starts, n_distinct
-
-
 # Doc-aligned cache block: ~32K shingles (256 KB of int64) so the shingle
 # slice and the work buffer stay L2-resident across all 128 permutation /
 # 31 bit-plane passes.  Streaming the full batch per pass instead saturates
@@ -323,19 +115,6 @@ def _doc_blocks(starts: np.ndarray, block: int):
             d1 += 1
         yield d0, d1
         d0 = d1
-
-
-def _segment_min(values: np.ndarray, starts: np.ndarray, fill: int) -> np.ndarray:
-    """Per-segment minimum via ``np.minimum.reduceat``; empty segments → fill."""
-    n_seg = starts.shape[0] - 1
-    out = np.full(n_seg, fill, dtype=np.int64)
-    seg_len = np.diff(starts)
-    nonempty = seg_len > 0
-    if values.shape[0]:
-        # reduceat mis-handles empty segments; compute on non-empty only
-        idx = starts[:-1][nonempty]
-        out[nonempty] = np.minimum.reduceat(values, idx)
-    return out
 
 
 def minhash_signatures(
@@ -374,9 +153,9 @@ def minhash_signatures(
         for t in range(cfg.num_perm):
             # a_t*h + b_t mod P; a<P, h<P, b<P ⇒ sum < 2**62, ok in int64.
             # The mod is the Mersenne shift-add fold (2**31 ≡ 1 mod P):
-            # bit-identical to ``%`` (same math as _fold_mersenne_inplace,
-            # fuzzed in tests/test_fused_hashing.py) but ~7 cheap vector
-            # ops instead of an int64 division — the division was the
+            # bit-identical to ``%`` (pinned against the ``%``-based
+            # oracles in tests/test_hashing.py and tests/test_properties.py)
+            # but ~7 cheap vector ops instead of an int64 division — the
             # hottest single op of the sign stage.  After two folds values
             # sit in [0, P+1]; the subtract-P tail is so rare that one
             # max() gate usually replaces the masked-subtract passes.

@@ -20,7 +20,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from dedup_gpu_stream_parallelism_spark.config import (
     BASE1,
@@ -45,7 +44,8 @@ def _chunk_keys_of(
     raw: bytes | None = None,
 ) -> list[int]:
     """Per-doc deduped int64 CDC chunk keys (first 8 bytes of the chunk
-    sha256) — the fused twin of operators.chunk.chunk_keys.
+    sha256) over the ``operators.chunk.chunk_spans`` cut rule, skipping
+    chunks shorter than ``min_chunk_len``.
 
     ``codes``/``raw`` let ``_sign_batch`` reuse its own symbol-code and
     utf-8 passes (the old path re-ran ``text_codes`` per doc and re-encoded
@@ -173,8 +173,9 @@ def sign_documents(
     cfg = cfg or DedupConfig()
     # CPU-bound kernel: parallelism = partition count, not bytes.  A small
     # corpus arrives as ONE scan partition (maxPartitionBytes packing) and
-    # would run the engine's costliest UDF on one core; no-op on wide
-    # inputs (run_pipeline pre-widens, real-scale scans are already wide).
+    # would run the engine's costliest UDF on one core.  This is the only
+    # widen on the signature path — callers pass the raw input (no-op on
+    # real-scale scans, which are already wide).
     df = widen_if_narrow(df)
     passthrough = [
         f for f in df.schema.fields if keep_text or f.name != text_col
@@ -195,12 +196,3 @@ def sign_documents(
 
     return df.mapInPandas(gen, schema=schema)
 
-
-def with_sha256(df: DataFrame, text_col: str = "content") -> DataFrame:
-    """JVM-side sha256 column (F.sha2) — the per-row invariant column.
-
-    Equality of this column with the UDF-computed one is the graft analog of
-    the decoder's referential-integrity hard-fail
-    (/root/reference/src/decoder.cpp:268-271).
-    """
-    return df.withColumn("sha256", F.sha2(F.col(text_col), 256))

@@ -136,82 +136,6 @@ def chunk_documents(
     return src.mapInPandas(gen, schema=schema)
 
 
-CHUNK_KEYS_SCHEMA = "doc_id bigint, band_key bigint"
-
-
-def chunk_keys(
-    docs: DataFrame,
-    cfg: DedupConfig | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = CDC_WINDOW,
-    modulus: int = CDC_MODULUS,
-    min_chunk_len: int = 64,
-) -> DataFrame:
-    """Fused fast path for candidate generation: (doc_id, 8-byte chunk key)
-    emitted directly from the chunking UDF — no hex strings through Arrow,
-    and per-doc key dedup happens in-UDF so NO distinct shuffle is needed
-    (the downstream collect_set dedups across docs).  Key = first 8 bytes
-    of sha256(chunk); a truncation collision merely merges buckets, adding
-    candidates the confirm stage rejects.  ``chunk_documents`` stays the
-    full-fidelity variant (offsets + hex sha) for the manifest/oracle."""
-    from dedup_gpu_stream_parallelism_spark.partitioning import widen_if_narrow
-
-    src = widen_if_narrow(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_key = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                text = text or ""
-                seen = set()
-                for s, e in chunk_spans(text, window, modulus):
-                    if e - s < min_chunk_len:
-                        continue
-                    piece = text[s:e]
-                    if not isinstance(piece, (bytes, bytearray)):
-                        piece = piece.encode("utf-8")
-                    k = int.from_bytes(
-                        hashlib.sha256(piece).digest()[:8],
-                        "big",
-                        signed=True,
-                    )
-                    if k not in seen:
-                        seen.add(k)
-                        out_id.append(did)
-                        out_key.append(k)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(out_id, dtype="int64"),
-                    "band_key": pd.array(out_key, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(gen, schema=CHUNK_KEYS_SCHEMA)
-
-
-def chunk_candidate_pairs_from_docs(
-    docs: DataFrame,
-    cfg: DedupConfig | None = None,
-    strategy: str = "all_pairs",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chunk_len: int = 64,
-) -> DataFrame:
-    """Docs → CDC chunk-key candidate pairs via the fused ``chunk_keys``
-    path (one UDF pass + ONE groupBy exchange; same buckets as the
-    full-fidelity ``chunk_documents`` → ``chunk_candidate_pairs`` chain)."""
-    cfg = cfg or DedupConfig()
-    from dedup_gpu_stream_parallelism_spark.operators.lsh import candidate_pairs
-
-    keyed = chunk_keys(
-        docs, cfg, id_col=id_col, text_col=text_col, min_chunk_len=min_chunk_len
-    )
-    return candidate_pairs(keyed, cfg, strategy=strategy)
-
-
 def chunk_candidate_pairs(
     chunks: DataFrame,
     cfg: DedupConfig | None = None,

@@ -5,8 +5,7 @@ their parallelism is the PARTITION COUNT of their input, not its bytes.  A
 byte-packed parquet scan (``spark.sql.files.maxPartitionBytes``) hands a
 small corpus to ONE task — at sf0.1 the whole 580 KB documents file is a
 single scan partition, so every standalone signature query ran its costliest
-UDF on one core while 31 sat idle (round-6 finding; ``plans/pipeline.py``
-had the same fix inline since round 2).
+UDF on one core while the others sat idle (round-6 finding).
 
 ``widen_if_narrow`` repartitions ONLY when the input is narrower than the
 cluster: at real 100 TB scale a corpus scan is already thousands of
@@ -14,7 +13,14 @@ partitions wide and this is a no-op (no shuffle added), while locally it
 spreads the Python work across every core.  The round-robin shuffle moves
 each row exactly once and the rows entering these kernels are slim
 projections (id + text), so the exchange cost is bounded by one pass over
-the input — the same trade ``run_pipeline`` documents.
+the input.
+
+One widen per kernel, at the kernel's entry point, fed the raw input:
+callers (``run_pipeline`` included) do not pre-widen.  The width probe
+builds the frame's RDD, and under AQE that runs every shuffle already in
+the frame as a Spark job at plan-build time — so probing a frame that
+already holds an exchange executes that shuffle once more than the later
+action needs.
 """
 
 from __future__ import annotations
@@ -22,11 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_if_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to cluster parallelism iff it has
-    fewer partitions than that — a no-op on already-wide inputs."""
+    fewer partitions than that — a no-op on already-wide inputs.
+
+    Pass the un-shuffled input: probing a frame that already holds an
+    exchange runs that shuffle (see the module docstring)."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    target = min_parts or parallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
+    if df.rdd.getNumPartitions() < parallelism:
+        return df.repartition(parallelism)
     return df

@@ -202,20 +202,12 @@ def run_pipeline(
             return stager.run(name, build)
         return build()
 
+    # ``docs`` stays the raw input: ``sign_documents`` widens a narrow scan
+    # itself, and the exact/confirm/cluster stages shuffle by key anyway, so
+    # a round-robin here would only add an exchange to every branch.
     docs = docs.select(
         F.col(id_col).alias("doc_id").cast("bigint"), F.col(text_col).alias("text")
     )
-    # The signature/chunk stages are CPU-bound pandas UDFs: their parallelism
-    # is the partition count, not bytes.  A byte-packed file scan (128 MB
-    # maxPartitionBytes) can hand 100+ MB of text to TWO tasks and leave the
-    # other 30 cores idle — so widen to cluster parallelism first.  (At real
-    # 100 TB scale this shuffle disappears: tune
-    # spark.sql.files.maxPartitionBytes ≈ bytes/desired-task instead; the
-    # reference sizes stages explicitly too, src/encoder.cpp:1388-1418.)
-    parallelism = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
-
     # signatures + banding + CDC chunk keys fused into ONE materialized
     # stage and ONE text pass: the signature UDF also emits the deduped
     # chunk keys (with_chunk_keys=True — the reference's integrated-stage

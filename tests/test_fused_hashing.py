@@ -1,19 +1,14 @@
-"""Bit-exactness of the fused batch hash utilities vs the per-doc spec.
+"""Bit-exactness of the fused signature batch (``signatures._sign_batch``).
 
-hashing.batch_hash_streams / batch_distinct_per_doc / the Mersenne fold /
-shingle_hashes_ladder are numpy rewrites of the signature hash math.
-They were briefly wired into the signature hot loop in round 5, then
-UNWIRED after an interleaved in-pipeline A/B showed the full-stream
-materialization losing ~20-60% to the shipping cache-blocked path under
-8 concurrent python workers (see BENCH.md "Fused signature-stage
-hashing: a recorded NEGATIVE result") — single-process micro-benchmarks
-had shown the opposite.
-The utilities stay because they are correct, independently useful
-(ladder gram hashes beat a 256-wide matmul at large k), and this parity
-pin is what makes any future re-wiring attempt cheap to validate:
-every output must stay IDENTICAL to the per-doc spec implementations
-(shingle_hashes / batch_shingle_hashes / np.unique / ``%``), which are
+``_sign_batch`` computes sha256, shingle stats, MinHash, SimHash and the
+CDC chunk keys in one pass, sharing one symbol-code array and one utf-8
+encoding per doc across every hash stream.  These tests pin it to the
+same columns recomposed from the per-doc spec primitives
+(``batch_shingle_hashes``, ``np.unique``, ``chunk_spans``), which are
 themselves fuzzed against the pure-python oracle (tests/test_properties.py).
+The Mersenne fold inside ``minhash_signatures`` is pinned against the
+``%``-based oracles by tests/test_hashing.py::test_minhash_matches_oracle
+and tests/test_properties.py::test_minhash_numpy_equals_python.
 """
 
 from __future__ import annotations
@@ -23,10 +18,9 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from dedup_gpu_stream_parallelism_spark.config import BASE1, BASE2, MERSENNE, DedupConfig
+from dedup_gpu_stream_parallelism_spark.config import BASE1, BASE2, DedupConfig
 from dedup_gpu_stream_parallelism_spark.functions import hashing
 from dedup_gpu_stream_parallelism_spark.functions.signatures import _sign_batch
-from dedup_gpu_stream_parallelism_spark.operators.chunk import CDC_WINDOW
 
 CFG = DedupConfig()
 
@@ -44,77 +38,6 @@ texts_strategy = st.lists(
     min_size=0,
     max_size=12,
 )
-
-
-@settings(max_examples=60, deadline=None)
-@given(texts=texts_strategy, k=st.integers(min_value=1, max_value=12))
-def test_batch_hash_streams_equals_per_doc(texts, k):
-    parts = [hashing.text_codes(t) for t in texts]
-    # small block size to force the halo/stitching path
-    flat1, flat2, starts, cdc_flat, cdc_starts = hashing.batch_hash_streams(
-        parts, k, CDC_WINDOW, block=64
-    )
-    want1, want_starts = hashing.batch_shingle_hashes(texts, k, BASE1)
-    want2, _ = hashing.batch_shingle_hashes(texts, k, BASE2)
-    assert starts.tolist() == want_starts.tolist()
-    assert flat1.tolist() == want1.tolist()
-    assert flat2.tolist() == want2.tolist()
-    wantc, wantc_starts = hashing.batch_shingle_hashes(texts, CDC_WINDOW, BASE1)
-    assert cdc_starts.tolist() == wantc_starts.tolist()
-    assert cdc_flat.tolist() == wantc.tolist()
-
-
-def test_batch_hash_streams_no_cdc():
-    texts = ["abcdefghijklmno", "", "xy", "abcdefghijklmno" * 3]
-    parts = [hashing.text_codes(t) for t in texts]
-    flat1, flat2, starts, cdc_flat, cdc_starts = hashing.batch_hash_streams(
-        parts, CFG.shingle_k, None
-    )
-    want1, want_starts = hashing.batch_shingle_hashes(texts, CFG.shingle_k, BASE1)
-    assert flat1.tolist() == want1.tolist()
-    assert starts.tolist() == want_starts.tolist()
-    assert cdc_flat is None and cdc_starts is None
-
-
-@settings(max_examples=40, deadline=None)
-@given(texts=texts_strategy)
-def test_batch_distinct_equals_per_doc_unique(texts):
-    flat, starts = hashing.batch_shingle_hashes(texts, CFG.shingle_k, BASE1)
-    uniq, uniq_starts, n_distinct = hashing.batch_distinct_per_doc(flat, starts)
-    for i in range(len(texts)):
-        want = np.unique(flat[starts[i] : starts[i + 1]])
-        got = uniq[uniq_starts[i] : uniq_starts[i + 1]]
-        assert got.tolist() == want.tolist()
-        assert int(n_distinct[i]) == want.shape[0]
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    vals=st.lists(
-        st.integers(min_value=0, max_value=(1 << 62) - 1), min_size=1, max_size=200
-    )
-)
-def test_mersenne_fold_equals_mod(vals):
-    x = np.array(vals, dtype=np.int64)
-    want = (x % MERSENNE).tolist()
-    got = x.copy()
-    hashing._fold_mersenne_inplace(got)
-    assert got.tolist() == want
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    text=st.text(max_size=400),
-    k=st.sampled_from([1, 2, 3, 7, 9, 32, 100, 256]),
-    base=st.sampled_from([BASE1, BASE2]),
-)
-def test_shingle_hashes_ladder_equals_matmul(text, k, base):
-    codes = hashing.text_codes(text)
-    got = hashing.shingle_hashes_ladder(codes, k, base)
-    # the matmul spec is int64-exact for k*max_code*P < 2**63: codes < 2**21
-    # and k <= 256 keeps each dot product under 2**60
-    want = hashing.shingle_hashes_from_codes(codes, k, base)
-    assert got.tolist() == want.tolist()
 
 
 def _sign_batch_reference(pdf, text_col, cfg, with_chunk_keys):
@@ -189,7 +112,7 @@ def test_sign_batch_matches_reference(texts, with_chunks):
 
 def test_sign_batch_long_mixed_docs():
     """Deterministic heavier case: repeated boilerplate (CDC cut sharing),
-    long docs crossing the stream block boundary, unicode + bytes mix."""
+    multi-KB docs with many CDC chunks each, unicode + bytes mix."""
     rng = np.random.default_rng(7)
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     boiler = " ".join(rng.choice(words, 200).tolist())

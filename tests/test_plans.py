@@ -156,3 +156,100 @@ def test_local_frame_matches_the_list_frame(spark, schema, rows):
         map(tuple, want.collect()), key=repr
     )
     assert "LocalTableScan" in _plan(got)
+
+
+def _roundrobins(df) -> int:
+    return _plan(df).count("RoundRobinPartitioning")
+
+
+def _roundrobin_feeds_udf(plan: str) -> bool:
+    """A round-robin exchange is the direct child of a MapInPandas node."""
+    lines = plan.splitlines()
+    return any(
+        "MapInPandas" in parent and "Exchange RoundRobinPartitioning" in child
+        for parent, child in zip(lines, lines[1:])
+    )
+
+
+@pytest.fixture(scope="module")
+def narrow_corpus_df(spark, corpus, tmp_path_factory):
+    """The test corpus as ONE small parquet file: a single scan partition,
+    the narrow input the CPU-bound kernels widen."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows, _ = corpus
+    path = str(tmp_path_factory.mktemp("narrow") / "corpus.parquet")
+    pq.write_table(pa.Table.from_pylist(rows), path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    return df
+
+
+def test_run_pipeline_widens_only_at_the_signature_kernel(
+    spark, narrow_corpus_df, cfg
+):
+    """``run_pipeline`` does not round-robin ``docs`` itself: the signature
+    stage's own widen is the single one on the flagship path, so the
+    branches that read the raw docs (exact, confirm, clusters) carry no
+    round-robin exchange of their own."""
+    from dedup_gpu_stream_parallelism_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(
+        narrow_corpus_df, cfg, id_col="file_id", text_col="content",
+        materialize="edges",
+    )
+    assert _roundrobins(res.exact_clusters) == 0
+    assert _roundrobins(res.clusters) == 0
+    # the signature widen (via the candidates) + verify's own repartition
+    assert _roundrobins(res.confirmed) == 2
+    signed = _plan(res.signed)
+    assert signed.count("RoundRobinPartitioning") == 1
+    assert _roundrobin_feeds_udf(signed)
+
+
+def test_cpu_bound_entry_queries_widen_right_before_their_udf(spark):
+    """The sign and LPF entry queries read a one-partition scan; each must
+    spread it over the cluster with a round-robin exchange feeding its
+    MapInPandas directly."""
+    import __spark_entry__ as e
+
+    for name in ("minhash_signatures", "lzss_estimate"):
+        assert _roundrobin_feeds_udf(_plan(e.queries()[name](spark, SF))), name
+
+
+def _jobs_in_group(spark, group: str, build) -> tuple[object, list[int]]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+        # job status reaches the tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_widen_probe_is_free_on_a_raw_scan(spark, narrow_corpus_df):
+    """``widen_if_narrow`` probes its input's width.  On a raw parquet scan
+    the probe launches no Spark job, and an input already at cluster
+    width comes back as the same object.  Probing a frame that already
+    holds an exchange is different: building its RDD runs that shuffle
+    (AQE), which is why callers must pass the un-shuffled input."""
+    from dedup_gpu_stream_parallelism_spark.partitioning import widen_if_narrow
+
+    par = spark.sparkContext.defaultParallelism
+    widened, jobs = _jobs_in_group(
+        spark, "widen-probe-raw", lambda: widen_if_narrow(narrow_corpus_df)
+    )
+    assert jobs == []
+    assert f"RoundRobinPartitioning({par})" in _plan(widened)
+
+    wide = spark.range(0, 4 * par, 1, par)
+    assert widen_if_narrow(wide) is wide
+
+    _, jobs = _jobs_in_group(
+        spark, "widen-probe-shuffled",
+        lambda: widen_if_narrow(narrow_corpus_df.repartition(2)),
+    )
+    assert jobs, "probing a shuffled frame no longer runs its shuffle"
