@@ -422,13 +422,11 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k — the BLOCKED kernel (cogrouped block-matrix GEMM, no
-    driver collect at any index size); results identical to the broadcast
-    fast path (tests/test_similarity.py), plan asserted collect-free in
+    """Exact top-k — the blocked kernel (cogrouped block-matrix GEMM, no
+    driver collect at any index size); results checked against a numpy
+    reference in tests/test_similarity.py, plan asserted cogrouped in
     tests/test_plans.py."""
-    return sim_op.cosine_topk(
-        _emb(spark, sf_dir), k=5, strategy="blocked"
-    ).orderBy("vec_id", "rank")
+    return sim_op.cosine_topk(_emb(spark, sf_dir), k=5).orderBy("vec_id", "rank")
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

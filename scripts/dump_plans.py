@@ -21,7 +21,7 @@ CASES = {
     "event_window_stats": "partial HashAggregate BEFORE the exchange = map-side combine; IsNotNull(ts) pushed to the parquet scan; two-phase distinct for countDistinct",
     "lsh_candidates": "exactly ONE band-key exchange: partial ObjectHashAggregate (collect_set) map-side, pair expansion via Generate (JVM array exprs), then 2-phase distinct",
     "cosine_topk": "blocked exact kernel: cogrouped block-matrix GEMM (FlatMapCoGroupsInPandas), WindowGroupLimit re-rank — no driver collect at any index size",
-    "simhash_near_dup": "slice groupBy exchange + two shuffle-hash joins to attach fingerprints; bit_count filter JVM-side",
+    "simhash_near_dup": "ZERO MapInPandas: the signed frame is checkpointed before the fan-out, as in minhash_jaccard_estimate; slice groupBy exchange + two shuffle-hash joins attach the fingerprints from the 16-byte checkpointed projection; bit_count filter JVM-side",
     "embedding_near_dup": "NO driver collect: block-pair replication joins + one cogrouped FlatMapCoGroupsInPandas GEMM per block pair, then CC",
     "chunk_roundtrip_check": "chunk store groupBy has partial_first map-side; decode = one sha join + one doc_id aggregation (sort-order concat inside)",
     "tpch_pricing_summary": "l_quantity predicate in PushedFilters; ReadSchema pruned to 5 columns; partial HashAggregate before the exchange",
@@ -32,7 +32,6 @@ CASES = {
     # round-6 additions: every remaining query >= 2 s in BENCH_r05
     "minhash_signatures": "ONE MapInPandas over a cluster-wide round-robin exchange (widen_if_narrow — a small corpus is one scan partition and ran the UDF single-task before round 6); posexplode + range-partitioned sort",
     "minhash_jaccard_estimate": "ZERO MapInPandas in the final plan: the signed frame is localCheckpoint'ed before the 3-branch fan-out (round-5 verdict #1 — the UDF executed once per branch); branches read the checkpointed RDD",
-    "simhash_near_dup": "ZERO MapInPandas: same pre-fan-out checkpoint as minhash_jaccard_estimate; slice groupBy + two joins + JVM bit_count filter over the 16-byte checkpointed projection",
     "dedup_keep_list": "flagship lineage in materialize='edges' mode: the plan tail is the post-union-find broadcast join + quality join (the sign→band→pair→confirm lineage executed once into the edge checkpoint; its full shape = the confirmed_pairs section)",
     "near_dup_clusters": "materialize='edges': plan tail = checkpointed CC labels broadcast-joined to docs; the fused upstream lineage (one MapInPandas text pass, one band-key exchange, verify) is the confirmed_pairs shape",
     "lzss_estimate": "ONE MapInPandas (suffix-array LPF) over the widened scan — no shuffle besides the widen round-robin and the output sort",

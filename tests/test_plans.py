@@ -74,31 +74,20 @@ def test_text_stats_scan_prunes_columns(spark):
 
 def test_blocked_embedding_kernels_are_cogrouped(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pairs_plan = _plan(sim.cosine_near_dup_pairs(emb, 0.4, strategy="blocked"))
+    pairs_plan = _plan(sim.cosine_near_dup_pairs(emb, 0.4))
     assert "FlatMapCoGroupsInPandas" in pairs_plan
-    topk_plan = _plan(sim.cosine_topk(emb, k=3, strategy="blocked"))
+    topk_plan = _plan(sim.cosine_topk(emb, k=3))
     assert "FlatMapCoGroupsInPandas" in topk_plan
 
 
 def test_driver_cosine_topk_runs_the_blocked_kernel(spark):
-    """The shipping cosine_topk query must execute the cogrouped block-
-    matrix GEMM — not the driver-collect broadcast path (whose plan is a
-    bare MapInPandas over the scan with no cogroup)."""
+    """The shipping cosine_topk query executes the cogrouped block-matrix
+    GEMM: every (query block, index block) pair is one cogroup task, and
+    no index is collected to the driver."""
     import __spark_entry__ as e
 
     plan = _plan(e.queries()["cosine_topk"](spark, SF))
     assert "FlatMapCoGroupsInPandas" in plan
-
-
-def test_cosine_topk_auto_switches_on_index_size(spark, monkeypatch):
-    """strategy='auto' picks broadcast under the cap, blocked above it."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    monkeypatch.setattr(sim, "BROADCAST_MAX_ROWS", 10)
-    plan_big = _plan(sim.cosine_topk(emb, k=3, strategy="auto"))
-    assert "FlatMapCoGroupsInPandas" in plan_big
-    monkeypatch.setattr(sim, "BROADCAST_MAX_ROWS", 10_000_000)
-    plan_small = _plan(sim.cosine_topk(emb, k=3, strategy="auto"))
-    assert "FlatMapCoGroupsInPandas" not in plan_small
 
 
 def test_signature_fanout_queries_evaluate_the_udf_once(spark):
@@ -126,8 +115,8 @@ def test_driver_built_frames_plan_as_local_table_scans(spark):
         (F.col("id") * 2).alias("a_id"), (F.col("id") * 2 + 1).alias("b_id")
     )
     for name, df in {
-        "blocked_topk": sim.cosine_topk(emb, k=3, strategy="blocked"),
-        "blocked_pairs": sim.cosine_near_dup_pairs(emb, 0.4, strategy="blocked"),
+        "blocked_topk": sim.cosine_topk(emb, k=3),
+        "blocked_pairs": sim.cosine_near_dup_pairs(emb, 0.4),
         "cluster_labels": clusters_from_pairs(docs, pairs),
     }.items():
         plan = _plan(df)
@@ -253,3 +242,16 @@ def test_widen_probe_is_free_on_a_raw_scan(spark, narrow_corpus_df):
         lambda: widen_if_narrow(narrow_corpus_df.repartition(2)),
     )
     assert jobs, "probing a shuffled frame no longer runs its shuffle"
+
+
+def test_building_embedding_queries_launches_no_job(spark):
+    """Building an embedding query is free: no index-size ``count()`` to
+    pick a kernel, no ``first()`` to learn the vector width."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    for name, build in {
+        "cosine_topk": lambda: sim.cosine_topk(emb),
+        "ann_lsh_topk": lambda: sim.ann_lsh_topk(emb),
+        "ann_near_dup_pairs": lambda: sim.ann_near_dup_pairs(emb),
+    }.items():
+        _, jobs = _jobs_in_group(spark, f"build-{name}", build)
+        assert jobs == [], name

@@ -5,6 +5,7 @@ while PLANS.md still showed round 3's dump."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 
@@ -43,3 +44,18 @@ def test_dump_plans_cases_exist_in_entry():
     qs = entry_mod.queries()
     missing = [name for name in _dump_plans_cases() if name not in qs]
     assert not missing, f"dump_plans CASES not in queries(): {missing}"
+
+
+def test_dump_plans_cases_has_no_duplicate_keys():
+    """A repeated key in the CASES literal silently drops the first
+    description (the dict keeps the last), so check the source itself."""
+    tree = ast.parse(open(os.path.join(REPO, "scripts", "dump_plans.py")).read())
+    (cases,) = [
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "CASES" for t in node.targets)
+    ]
+    keys = [k.value for k in cases.keys]
+    dupes = sorted({k for k in keys if keys.count(k) > 1})
+    assert not dupes, f"duplicate CASES keys in dump_plans.py: {dupes}"

@@ -14,24 +14,59 @@ def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
-def test_cosine_topk_exact_vs_numpy(spark, emb):
-    got = sim.cosine_topk(emb, k=3).collect()
+@pytest.fixture(scope="module")
+def numpy_sims(emb):
+    """Reference: ids sorted ascending and the full rounded cosine matrix."""
     pdf = emb.toPandas().sort_values("vec_id").reset_index(drop=True)
     ids = pdf["vec_id"].to_numpy()
     mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     mat = mat / np.linalg.norm(mat, axis=1)[:, None]
-    sims = mat @ mat.T
+    return ids, np.round(mat @ mat.T, 6)
+
+
+def test_cosine_topk_exact_vs_numpy(spark, emb, numpy_sims):
+    """Ids, ranks and rounded cosines equal the numpy reference at every
+    block count (n_blocks=1: the diagonal block pair only)."""
+    ids, sims = numpy_sims
+    sims = sims.copy()
     np.fill_diagonal(sims, -np.inf)
-    by_query = {}
-    for r in got:
-        by_query.setdefault(r.vec_id, []).append((r.rank, r.neighbor_id, r.cosine))
-    assert set(by_query) == set(ids.tolist())
-    for qi, qid in enumerate(ids[:50]):
-        want_order = np.lexsort((ids, -np.round(sims[qi], 6)))[:3]
-        got_rows = sorted(by_query[qid])
-        assert [n for _, n, _ in got_rows] == ids[want_order].tolist()
-        for (_, _, c), wi in zip(got_rows, want_order):
-            assert abs(c - round(float(sims[qi, wi]), 6)) < 1e-9
+    for n_blocks in (1, 3, 4):
+        got = sim.cosine_topk(emb, k=3, n_blocks=n_blocks).collect()
+        by_query = {}
+        for r in got:
+            by_query.setdefault(r.vec_id, []).append((r.rank, r.neighbor_id, r.cosine))
+        assert set(by_query) == set(ids.tolist()), n_blocks
+        for qi, qid in enumerate(ids):
+            want_order = np.lexsort((ids, -sims[qi]))[:3]
+            got_rows = sorted(by_query[qid])
+            assert [rk for rk, _, _ in got_rows] == [1, 2, 3], n_blocks
+            assert [n for _, n, _ in got_rows] == ids[want_order].tolist(), n_blocks
+            for (_, _, c), wi in zip(got_rows, want_order):
+                assert abs(c - sims[qi, wi]) < 1e-9, n_blocks
+
+
+def test_cosine_near_dup_pairs_exact_vs_numpy(spark, emb, numpy_sims):
+    """The blocked pair set equals the numpy reference — ids, rounded
+    cosines, a_id < b_id, each pair once — at every block count."""
+    ids, sims = numpy_sims
+    ai, bi = np.nonzero(np.triu(sims >= 0.4, k=1))
+    want = {(int(ids[a]), int(ids[b])): sims[a, b] for a, b in zip(ai, bi)}
+    assert want
+    for n_blocks in (1, 5, 8):
+        rows = sim.cosine_near_dup_pairs(emb, threshold=0.4, n_blocks=n_blocks).collect()
+        got = {(r.a_id, r.b_id): r.cosine for r in rows}
+        assert len(got) == len(rows), n_blocks
+        assert all(a < b for a, b in got), n_blocks
+        assert got.keys() == want.keys(), n_blocks
+        assert all(abs(got[p] - want[p]) < 1e-9 for p in want), n_blocks
+
+
+def test_near_dup_clusters_reject_duplicate_ids(spark, emb):
+    """Clustering assumes unique ids; a repeated vec_id must fail the query
+    instead of emitting two cluster rows for one id."""
+    dup = emb.unionByName(emb.orderBy("vec_id").limit(1))
+    with pytest.raises(Exception, match="duplicate vec_id"):
+        sim.embedding_near_dup_clusters(dup, threshold=0.4).collect()
 
 
 def test_cosine_topk_shape(spark, emb):
@@ -71,25 +106,6 @@ def test_embedding_stats_values(spark, emb):
         assert r.dim == v.shape[0]
         assert abs(r.l2_norm - round(float(np.sqrt((v * v).sum())), 6)) < 1e-6
         assert abs(r.mean_val - round(float(v.sum() / len(v)), 6)) < 1e-6
-
-
-def test_blocked_pairs_match_broadcast(spark, emb):
-    """The distributed block-matrix kernel must produce the exact same pair
-    set (ids + rounded cosines) as the broadcast GEMM."""
-    blocked = {
-        (r.a_id, r.b_id, r.cosine)
-        for r in sim.cosine_near_dup_pairs(
-            emb, threshold=0.4, strategy="blocked", n_blocks=5
-        ).collect()
-    }
-    broadcast = {
-        (r.a_id, r.b_id, r.cosine)
-        for r in sim.cosine_near_dup_pairs(
-            emb, threshold=0.4, strategy="broadcast"
-        ).collect()
-    }
-    assert blocked == broadcast
-    assert all(a < b for a, b, _ in blocked)
 
 
 def test_ann_near_dup_recall(spark, emb):
@@ -153,24 +169,6 @@ def test_ivf_recall_at_derived_params(spark, emb):
     ).collect()
     got = {(r.vec_id, r.neighbor_id) for r in rows}
     assert len(got & exact) / len(exact) >= 0.4
-
-
-def test_broadcast_refuses_above_cap(spark, emb, monkeypatch):
-    monkeypatch.setattr(sim, "BROADCAST_MAX_ROWS", 3)
-    with pytest.raises(ValueError, match="broadcast strategy refused"):
-        sim.cosine_near_dup_pairs(emb, threshold=0.4, strategy="broadcast")
-
-
-def test_blocked_topk_matches_broadcast(spark, emb):
-    """Distributed block-matrix top-k must equal the broadcast kernel
-    exactly (ids, ranks, rounded cosines)."""
-    broad = sorted(
-        map(tuple, sim.cosine_topk(emb, k=4, strategy="broadcast").collect())
-    )
-    block = sorted(
-        map(tuple, sim.cosine_topk(emb, k=4, strategy="blocked", n_blocks=3).collect())
-    )
-    assert broad == block
 
 
 def test_ivf_topk_recall_vs_exact(spark, emb):
